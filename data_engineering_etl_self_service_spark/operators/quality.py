@@ -14,7 +14,10 @@ Differences by design:
    pass over the whole file. Here every data-touching check compiles to an
    aggregate EXPRESSION and all of them evaluate in ONE ``df.agg(...)`` job
    — at 100 TB that is the difference between 1 and N full-table scans.
-   Metadata checks (required_columns) never touch data at all.
+   Metadata checks (required_columns) never touch data at all. The same
+   expressions can instead ride a write as observed metrics
+   (``check_metrics`` + ``run_checks(observed=...)``), which makes the
+   checks free of any scan of their own.
 2. **Reports, not exceptions.** The reference raises on failure, which makes
    its own FAILED branch unreachable (xcom_push at ref :129 only runs on
    success while dag_factory.py:38 branches on the pushed status — a
@@ -195,17 +198,49 @@ def compile_checks(
     return agg_cols, immediate
 
 
-def run_checks(
+def observable(check: Check | dict) -> bool:
+    """Can this check's metrics ride a write as an ``Observation``?
+
+    Two cannot: Spark rejects DISTINCT aggregates in observed metrics
+    (exact ``unique_column``; its ``approx`` tier observes fine), and
+    ``foreign_key`` needs an anti-join against a second table."""
+    c = check if isinstance(check, Check) else Check.from_dict(check)
+    if c.check_type == "unique_column":
+        return bool(c.params.get("approx"))
+    return c.check_type != "foreign_key"
+
+
+def check_metrics(
     df: DataFrame, checks: list[Check | dict], count_rows: bool = False
-) -> DQReport:
-    """Evaluate all checks in at most ONE Spark job."""
+) -> list[Column]:
+    """The aggregate Columns ``run_checks(df, checks, count_rows)``
+    evaluates: one fused ``df.agg``, or metrics observed on a write and
+    handed back as ``run_checks(..., observed=row)``."""
     checks = [c if isinstance(c, Check) else Check.from_dict(c) for c in checks]
-    agg_cols, immediate = compile_checks(df, checks)
+    agg_cols, _ = compile_checks(df, checks)
     if count_rows:
-        agg_cols = list(agg_cols) + [
-            F.count(F.lit(1)).alias("_dq_total_rows")
-        ]
-    row = df.agg(*agg_cols).collect()[0].asDict() if agg_cols else {}
+        agg_cols.append(F.count(F.lit(1)).alias("_dq_total_rows"))
+    return agg_cols
+
+
+def run_checks(
+    df: DataFrame,
+    checks: list[Check | dict],
+    count_rows: bool = False,
+    observed: dict | None = None,
+) -> DQReport:
+    """Evaluate all checks: ONE fused aggregate job, plus one anti-join
+    job per ``foreign_key`` check.
+
+    ``observed`` is the row of ``check_metrics(df, checks, count_rows)``
+    already observed on a write; the aggregate job is then skipped."""
+    checks = [c if isinstance(c, Check) else Check.from_dict(c) for c in checks]
+    _, immediate = compile_checks(df, checks)
+    if observed is not None:
+        row = observed
+    else:
+        agg_cols = check_metrics(df, checks, count_rows)
+        row = df.agg(*agg_cols).collect()[0].asDict() if agg_cols else {}
 
     results: list[CheckResult] = []
     imm = {id(c): v for c, v in immediate}

@@ -11,7 +11,9 @@ ref: operators/data_quality_operator.py:120-129 vs dag_factory.py:38).
 Quarantine semantics: on DQ failure the batch is written to
 ``<path>__quarantine`` instead of the publish path, so bad data is kept for
 forensics but never visible to consumers — at 100 TB "re-ingest later" is a
-real cost, "published bad data" is worse.
+real cost, "published bad data" is worse. Snapshot sinks write the batch
+once: the checks are observed on that staged write, and publish or
+quarantine is the choice of which table's manifest commits it.
 """
 
 from __future__ import annotations
@@ -21,7 +23,13 @@ from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.quality import DQReport, run_checks
+from ..operators.quality import (
+    Check,
+    DQReport,
+    check_metrics,
+    observable,
+    run_checks,
+)
 from .spec import PipelineSpec
 
 AlertFn = Callable[[str, DQReport], None]
@@ -40,10 +48,15 @@ class PipelineResult:
     #: batch path silently shadowing the row path.
     quarantined_rows_path: str | None = None
     #: run observability: wall seconds per stage. ``checks_s`` covers the
-    #: fused DQ scan (the first action), ``write_s`` the sink job;
-    #: ``plan_s`` is driver-side plan construction (source+transforms are
-    #: lazy). The reference scattered this across Airflow task logs and
-    #: the XCom metadata DB; here it's a plain field on the result.
+    #: checks run before the write: the fused DQ scan for non-snapshot
+    #: sinks, only the non-observable checks for snapshot sinks (plus the
+    #: offender count and write in rows mode). ``write_s`` covers the
+    #: sink write (for snapshot sinks the write the remaining checks are
+    #: observed on, and its manifest commit) and post-publish
+    #: maintenance; ``plan_s`` is driver-side plan construction
+    #: (source+transforms are lazy). The reference scattered this across
+    #: Airflow task logs and the XCom metadata DB; here it's a plain field
+    #: on the result.
     metrics: dict[str, float] | None = None
 
     @property
@@ -699,6 +712,17 @@ def apply_transformations(df: DataFrame, spec: PipelineSpec) -> DataFrame:
     return df
 
 
+def _snapshot_options(spec: PipelineSpec) -> dict[str, str]:
+    opts = spec.destination.options
+    return {
+        "mode": opts.get("snapshot_mode", "append"),
+        # data-file format of the versioned table (round 10): parquet
+        # (default) or orc — maintenance hooks dispatch on the manifest,
+        # so compaction/vacuum work on either
+        "format": opts.get("format", "parquet"),
+    }
+
+
 def _write_sink(
     df: DataFrame, spec: PipelineSpec, path: str, ds: str | None = None
 ) -> None:
@@ -711,15 +735,7 @@ def _write_sink(
         # in-place overwrite (sources/snapshots.py).
         from ..sources.snapshots import write_snapshot
 
-        write_snapshot(
-            df,
-            path,
-            mode=dst.options.get("snapshot_mode", "append"),
-            # data-file format of the versioned table (round 10):
-            # parquet (default) or orc — maintenance hooks dispatch on
-            # the manifest, so compaction/vacuum work on either
-            format=dst.options.get("format", "parquet"),
-        )
+        write_snapshot(df, path, **_snapshot_options(spec))
         return
     if dst.type == "snapshot_merge":
         # Keyed upsert into a versioned table — the APPLY side of a
@@ -835,11 +851,11 @@ def _write_sink(
         # dynamic overwrite: a re-run of one ds replaces exactly that
         # partition — without this a backfill's later day would clobber
         # every earlier day's output (static overwrite truncates the
-        # whole table). Caught by the backfill idempotency test.
-        df.sparkSession.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        writer = writer.partitionBy(*dst.partition_by)
+        # whole table). Caught by the backfill idempotency test. A
+        # per-write option, so the session's own mode stays as it was.
+        writer = writer.option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy(*dst.partition_by)
     if dst.type == "json":
         writer.json(path)
     else:
@@ -870,53 +886,67 @@ def compile_pipeline(
         base = spec.destination.path
         published = quarantined = quarantined_rows = None
         n_bad_rows = 0
-        persisted = None
+        checks = [Check.from_dict(c) for c in spec.checks]
         if spec.quality_mode == "rows":
             # Per-row checks divert only offending rows (tagged with the
             # checks they broke); table-level checks then gate the clean
             # remainder with the usual batch branch.
             from ..operators.quality import ROW_CHECKS, split_by_checks
 
-            row_checks = [
-                c
-                for c in spec.checks
-                if c.get("check_type") in ROW_CHECKS
-            ]
-            table_checks = [
-                c
-                for c in spec.checks
-                if c.get("check_type") not in ROW_CHECKS
-            ]
-            # Persist the source+transform result once: the split's two
-            # filters, the offender count/write, the fused table checks,
-            # and the publish write would otherwise each recompute the
-            # full lineage (up to 4 scans of the source).
-            persisted = df.persist()
-            good, bad = split_by_checks(persisted, row_checks)
+            row_checks = [c for c in checks if c.check_type in ROW_CHECKS]
+            checks = [c for c in checks if c.check_type not in ROW_CHECKS]
+            good, bad = split_by_checks(df, row_checks)
             n_bad_rows = bad.count()
             if base and n_bad_rows:
                 quarantined_rows = f"{base}__quarantine"
                 _write_sink(bad, spec, quarantined_rows, ds)
             df = good
-            report = run_checks(df, table_checks, count_rows=True)
+        # Snapshot sinks write once (write-audit-publish): the batch is
+        # staged into an unreferenced data dir with every observable
+        # check riding that write as one Observation, and the gate only
+        # picks which table's manifest commits it. Checks that cannot be
+        # observed keep their own job before the write.
+        staged_sink = bool(base) and spec.destination.type == "snapshot"
+        if staged_sink:
+            riders = [c for c in checks if observable(c)]
+            report = run_checks(df, [c for c in checks if not observable(c)])
         else:
-            report = run_checks(df, list(spec.checks), count_rows=True)
+            report = run_checks(df, checks, count_rows=True)
         t2 = time.perf_counter()
+        if staged_sink:
+            from ..sources.snapshots import commit_snapshot, stage_snapshot
+
+            staged = stage_snapshot(
+                df,
+                base,
+                observe=check_metrics(df, riders, count_rows=True),
+                **_snapshot_options(spec),
+            )
+            rode = run_checks(
+                df, riders, count_rows=True, observed=staged.observed
+            )
+            order = {id(c): i for i, c in enumerate(checks)}
+            report = DQReport(
+                sorted(
+                    report.results + rode.results,
+                    key=lambda r: order[id(r.check)],
+                ),
+                n_rows=rode.n_rows,
+            )
         if base:
             if report.passed:
                 published = base
-                _write_sink(df, spec, published, ds)
             elif spec.quality_mode == "rows":
                 # the clean remainder failed a TABLE-level gate: park it
                 # separately from the row offenders (different schema —
                 # offenders carry _violations) and publish nothing.
                 quarantined = f"{base}__quarantine_batch"
-                _write_sink(df, spec, quarantined, ds)
             else:
                 quarantined = f"{base}__quarantine"
-                _write_sink(df, spec, quarantined, ds)
-        if persisted is not None:
-            persisted.unpersist()
+            if staged_sink:
+                commit_snapshot(staged, published or quarantined)
+            else:
+                _write_sink(df, spec, published or quarantined, ds)
         # Post-publish lake maintenance (round 8): the self-service
         # spec can ask for small-file compaction of the table it just
         # published — the audit→compact loop (operators/layout.py

@@ -227,16 +227,13 @@ def write_partitioned_parquet(
     only that partition — the idempotent-backfill semantics the reference
     gets from date-keyed S3 paths. Default codec is zstd: at 100 TB the
     ~25-30% size win over snappy is a first-order scan-cost lever and the
-    decode speed is comparable.
+    decode speed is comparable. The mode is a per-write option: the
+    session's ``spark.sql.sources.partitionOverwriteMode`` is left as it
+    was for every other write.
     """
-    (
-        df.sparkSession.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-    )
-    df.write.mode(mode).option("compression", compression).partitionBy(
-        *partition_cols
-    ).parquet(path)
+    df.write.mode(mode).option("compression", compression).option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy(*partition_cols).parquet(path)
 
 
 def write_bucketed_table(

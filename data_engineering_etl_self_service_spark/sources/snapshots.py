@@ -48,8 +48,9 @@ import json
 import os
 import time
 import uuid
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 _MANIFEST_DIR = "_snapshots"
 _DATA_DIR = "data"
@@ -122,32 +123,110 @@ def write_snapshot(
     because this Spark build exposes ``_metadata.row_index`` (the
     row-position half of the delete key) for parquet scans only.
     """
+    staged = stage_snapshot(
+        df, base_dir, mode=mode, partition_by=partition_by, format=format
+    )
+    return commit_snapshot(staged, meta=meta, max_retries=max_retries)
+
+
+@dataclass(frozen=True)
+class StagedSnapshot:
+    """Data files written by :func:`stage_snapshot` that no manifest
+    references yet; :func:`commit_snapshot` publishes them."""
+
+    base_dir: str
+    #: the staged ``data/<uuid>`` dir, relative to ``base_dir``
+    rel: str
+    mode: str
+    schema: str
+    format: str
+    partition_by: tuple[str, ...]
+    #: the metric row observed on the write ({} when nothing was observed)
+    observed: dict
+
+
+def stage_snapshot(
+    df: DataFrame,
+    base_dir: str,
+    mode: str = "append",
+    partition_by: tuple[str, ...] = (),
+    format: str = "parquet",
+    observe=(),
+) -> StagedSnapshot:
+    """The write half of :func:`write_snapshot`: ``df``'s data files land
+    in a fresh ``data/<uuid>`` dir under ``base_dir`` that no reader
+    knows about until :func:`commit_snapshot`.
+
+    ``observe`` takes aggregate Columns that ride the write job as one
+    ``Observation``; their row comes back as ``observed``. A caller can
+    then audit exactly the rows it wrote and decide where to commit them
+    (write-audit-publish) without a second pass over ``df``'s lineage.
+    Spark rejects DISTINCT aggregates in observed metrics."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"unknown snapshot mode: {mode!r}")
     if partition_by and mode != "overwrite":
         raise ValueError("partitioned snapshots require mode='overwrite'")
     if format not in ("parquet", "orc"):
         raise ValueError(f"unknown snapshot format: {format!r}")
-    data_dir = os.path.join(base_dir, _DATA_DIR, uuid.uuid4().hex)
-    writer = df.write.mode("error")
+    rel = os.path.join(_DATA_DIR, uuid.uuid4().hex)
+    obs = Observation() if observe else None
+    out = df.observe(obs, *observe) if observe else df
+    writer = out.write.mode("error")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    getattr(writer, format)(data_dir)
-
-    new_rel = os.path.relpath(data_dir, base_dir)
-    return _commit_manifest(
+    getattr(writer, format)(os.path.join(base_dir, rel))
+    return StagedSnapshot(
         base_dir,
-        lambda head_dirs: (head_dirs + [new_rel])
-        if mode == "append"
-        else [new_rel],
+        rel,
         mode,
         df.schema.simpleString(),
+        format,
+        tuple(partition_by),
+        obs.get if observe else {},
+    )
+
+
+def commit_snapshot(
+    staged: StagedSnapshot,
+    base_dir: str | None = None,
+    meta: dict | None = None,
+    max_retries: int = 10,
+) -> int:
+    """Commit a staged write as the next version of ``base_dir`` (default:
+    the table it was staged under); returns the version number.
+
+    Committing to another table first moves the staged dir under it (one
+    rename, no data rewrite), so a gate decided after the write can route
+    the batch to a quarantine table instead. The move takes along no
+    manifest; directories it leaves empty under the staged table are
+    removed."""
+    target = base_dir or staged.base_dir
+    if target != staged.base_dir:
+        src = os.path.join(staged.base_dir, staged.rel)
+        dst = os.path.join(target, staged.rel)
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        os.rename(src, dst)
+        for d in (os.path.dirname(src), staged.base_dir):
+            try:
+                os.rmdir(d)  # only ever removes an emptied dir
+            except OSError:
+                break
+    mode, rel = staged.mode, staged.rel
+    return _commit_manifest(
+        target,
+        lambda head_dirs: (head_dirs + [rel]) if mode == "append" else [rel],
+        mode,
+        staged.schema,
         # format LAST so a caller meta key named "format" can't make
         # the manifest lie about what the data files are (review r10)
         {
             **(meta or {}),
-            **({"partitioned": list(partition_by)} if partition_by else {}),
-            "format": format,
+            **(
+                {"partitioned": list(staged.partition_by)}
+                if staged.partition_by
+                else {}
+            ),
+            "format": staged.format,
         },
         max_retries,
     )
@@ -602,8 +681,6 @@ def delete_where(
     # the matched-row count rides the write job as an observed metric
     # (opt r13): the old read-back count cost one extra Spark job
     # (+ schema inference) per delete call
-    from pyspark.sql import Observation
-
     obs = Observation()
     matches.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
         "error"
@@ -971,8 +1048,6 @@ def merge_into_snapshot_delta(
     )
     # row counts ride the write jobs as observed metrics (opt r13):
     # the old read-back counts cost two extra Spark jobs per merge
-    from pyspark.sql import Observation
-
     vec_rel = os.path.join(_DELETE_DIR, uuid.uuid4().hex)
     vec_obs = Observation()
     matches.observe(vec_obs, F.count(F.lit(1)).alias("n")).write.mode(

@@ -26,6 +26,8 @@ from data_engineering_etl_self_service_spark.sources.snapshots import (
     write_snapshot,
 )
 
+pytestmark = pytest.mark.pipeline
+
 
 def _df(spark, lo, hi):
     return spark.range(lo, hi).select(

@@ -10,7 +10,11 @@ from __future__ import annotations
 import json
 import textwrap
 
+import pytest
+
 from data_engineering_etl_self_service_spark.__main__ import main
+
+pytestmark = pytest.mark.pipeline
 
 
 def _write_spec(tmp_path, name, min_rows, out_dir):

@@ -23,6 +23,8 @@ from data_engineering_etl_self_service_spark.sources.snapshots import (
     write_snapshot,
 )
 
+pytestmark = pytest.mark.pipeline
+
 
 def _mk_orc(spark, tmp_path, n=100):
     base = str(tmp_path / "tbl")

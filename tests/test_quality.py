@@ -4,10 +4,14 @@ and report (not exception) semantics."""
 
 from __future__ import annotations
 
+import pytest
+
 from data_engineering_etl_self_service_spark.operators.quality import (
     Check,
     run_checks,
 )
+
+pytestmark = pytest.mark.pipeline
 
 
 def _df(spark):
@@ -297,3 +301,54 @@ def test_quantile_range_check_gates_distribution(spark):
         df, [{"check_type": "quantile_range", "column": "nope", "min": 0}]
     )
     assert not rep3.passed and "not found" in rep3.failures[0]
+
+
+def test_observed_metrics_match_the_fused_job(spark, tmp_path):
+    """Every observable check type reports the same from metrics observed
+    on a write as from its own fused aggregate job; exact unique_column
+    and foreign_key are the ones that cannot be observed."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    from data_engineering_etl_self_service_spark.operators.quality import (
+        check_metrics,
+        observable,
+    )
+
+    df = spark.createDataFrame(
+        [(1, 10.0, "a", "2025-07-28 10:00:00"), (2, None, "b", None),
+         (3, 99.0, "zz", "2025-07-28 23:30:00")],
+        "id long, price double, tag string, ts string",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    checks = [
+        {"check_type": "min_row_count", "threshold": 3},
+        {"check_type": "required_columns", "columns": ["id", "nope"]},
+        {"check_type": "unique_column", "column": "id", "approx": True},
+        {"check_type": "non_null", "column": "price"},
+        {"check_type": "value_range", "column": "price", "min": 0, "max": 50},
+        {"check_type": "accepted_values", "column": "tag", "values": ["a", "b"]},
+        {"check_type": "freshness", "column": "ts",
+         "as_of": "2025-07-29T00:00:00", "max_lag_seconds": 3600},
+        {"check_type": "quantile_range", "column": "price", "min": 0, "max": 50},
+        {"check_type": "non_null", "column": "absent"},
+        {"check_type": "row_has_soul"},
+    ]
+    assert all(observable(c) for c in checks)
+    assert not observable({"check_type": "unique_column", "column": "id"})
+    assert not observable({"check_type": "foreign_key", "column": "id"})
+
+    obs = Observation()
+    df.observe(obs, *check_metrics(df, checks, count_rows=True)).write.parquet(
+        str(tmp_path / "out")
+    )
+    seen = run_checks(df, checks, count_rows=True, observed=obs.get)
+    fused = run_checks(df, checks, count_rows=True)
+    assert seen.n_rows == fused.n_rows == 3
+
+    def flat(rep):
+        return [(r.check.name, r.passed, r.detail) for r in rep.results]
+
+    assert flat(seen) == flat(fused)
+    assert [p for _, p, _ in flat(seen)] == [
+        True, False, True, False, False, False, True, True, False, False,
+    ]

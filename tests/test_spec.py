@@ -4,11 +4,15 @@ from __future__ import annotations
 
 import textwrap
 
+import pytest
+
 from data_engineering_etl_self_service_spark.plans import (
     load_spec,
     run_pipeline,
 )
 from data_engineering_etl_self_service_spark.plans.spec import spec_from_dict
+
+pytestmark = pytest.mark.pipeline
 
 REFERENCE_SHAPE = """
 pipeline_info:
@@ -217,6 +221,176 @@ def test_pipeline_snapshot_destination_versions_reruns(spark, tmp_path):
     assert snapshot_versions(base) == [1, 2]
     assert read_snapshot(spark, base, version=1).count() == 50
     assert read_snapshot(spark, base).count() == 100
+
+
+def _snapshot_spec(src, out, checks):
+    return spec_from_dict(
+        {
+            "pipeline_info": {"name": "gate"},
+            "source": {"type": "file", "format": "parquet", "path": src},
+            "destination": {"type": "snapshot", "path": out},
+            "data_quality_checks": checks,
+        }
+    )
+
+
+def test_snapshot_sink_computes_lineage_once(spark, tmp_path):
+    """Snapshot sinks observe the checks on the one staged write, so the
+    source and transforms run once per run, not once for the checks and
+    again for the write."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from data_engineering_etl_self_service_spark.plans.pipeline import (
+        compile_pipeline,
+    )
+
+    src = str(tmp_path / "in.parquet")
+    spark.range(200).write.parquet(src)
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def bump(x):
+        calls.add(1)
+        return x
+
+    spec = _snapshot_spec(
+        src,
+        str(tmp_path / "tbl"),
+        [
+            {"check_type": "non_null", "column": "echo"},
+            {"check_type": "min_row_count", "threshold": 10},
+        ],
+    )
+    res = compile_pipeline(
+        spec, transform=lambda df: df.withColumn("echo", bump("id"))
+    )(spark)
+    assert res.passed and res.n_rows == 200
+    assert calls.value == 200
+    assert sorted(os.listdir(tmp_path)) == ["in.parquet", "tbl"]
+
+
+def test_snapshot_sink_gate_end_state(spark, tmp_path):
+    """A failed gate commits the staged batch to __quarantine and leaves
+    nothing under the publish path; a passing run creates no quarantine."""
+    import os
+
+    from data_engineering_etl_self_service_spark.sources.snapshots import (
+        read_snapshot,
+        snapshot_versions,
+    )
+
+    src = str(tmp_path / "in.parquet")
+    spark.range(50).selectExpr("id", "id * 2 AS v").write.parquet(src)
+    out = str(tmp_path / "tbl")
+    res = run_pipeline(
+        spark,
+        _snapshot_spec(src, out, [{"check_type": "min_row_count", "threshold": 51}]),
+    )
+    assert not res.passed and res.published_path is None
+    assert res.quarantined_path == out + "__quarantine"
+    assert res.n_rows == 50
+    # no manifest and no staged data/<uuid> dir under the publish path
+    assert snapshot_versions(out) == []
+    assert not os.path.exists(os.path.join(out, "data"))
+    assert snapshot_versions(res.quarantined_path) == [1]
+    got = read_snapshot(spark, res.quarantined_path)
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, spark.read.parquet(src).collect())
+    )
+
+    ok = run_pipeline(
+        spark,
+        _snapshot_spec(src, out, [{"check_type": "min_row_count", "threshold": 50}]),
+    )
+    assert ok.passed and ok.published_path == out
+    assert snapshot_versions(out) == [1]
+    assert read_snapshot(spark, out).count() == 50
+    # the earlier failure's quarantine is untouched; the pass adds none
+    assert snapshot_versions(res.quarantined_path) == [1]
+    clean = str(tmp_path / "clean")
+    run_pipeline(
+        spark,
+        _snapshot_spec(src, clean, [{"check_type": "min_row_count", "threshold": 1}]),
+    )
+    assert not os.path.exists(clean + "__quarantine")
+
+
+def test_snapshot_sink_exact_unique_gates_before_the_write(spark, tmp_path):
+    """Exact unique_column cannot ride the write (Spark rejects DISTINCT
+    in observed metrics): it runs its own job first, and the gate still
+    decides publish vs quarantine, with results in spec order."""
+    from data_engineering_etl_self_service_spark.sources.snapshots import (
+        read_snapshot,
+        snapshot_versions,
+    )
+
+    src = str(tmp_path / "in.parquet")
+    spark.range(30).selectExpr("id", "id % 3 AS k").write.parquet(src)
+    checks = [
+        {"check_type": "min_row_count", "threshold": 1},
+        {"check_type": "unique_column", "column": "k"},
+        {"check_type": "non_null", "column": "k"},
+    ]
+    bad = run_pipeline(spark, _snapshot_spec(src, str(tmp_path / "a"), checks))
+    assert not bad.passed and bad.published_path is None
+    assert [(r.check.check_type, r.passed) for r in bad.report.results] == [
+        ("min_row_count", True),
+        ("unique_column", False),
+        ("non_null", True),
+    ]
+    assert bad.report.results[1].detail == "distinct=3 non-null=30"
+    assert read_snapshot(spark, bad.quarantined_path).count() == 30
+    assert snapshot_versions(str(tmp_path / "a")) == []
+
+    checks[1] = {"check_type": "unique_column", "column": "id"}
+    good = run_pipeline(spark, _snapshot_spec(src, str(tmp_path / "b"), checks))
+    assert good.passed and good.n_rows == 30
+    assert read_snapshot(spark, good.published_path).count() == 30
+
+
+def test_partitioned_sink_leaves_session_overwrite_mode(spark, tmp_path):
+    """Dynamic partition overwrite is a per-write option: after a
+    partitioned pipeline run (and the files.py lake sink) the session's
+    partitionOverwriteMode is what it was, so a later static overwrite
+    still truncates."""
+    from data_engineering_etl_self_service_spark.sources.files import (
+        write_partitioned_parquet,
+    )
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "STATIC")
+    try:
+        spec = spec_from_dict(
+            {
+                "pipeline_info": {"name": "parts"},
+                "source": {"type": "synthetic_events", "n": 20, "seed": 5},
+                "destination": {
+                    "type": "parquet",
+                    "path": str(tmp_path / "out"),
+                    "partition_by": ["ds"],
+                },
+                "data_quality_checks": [],
+            }
+        )
+        for ds in ("2025-07-01", "2025-07-02"):
+            assert run_pipeline(spark, spec, ds=ds).passed
+        assert spark.conf.get(key) == "STATIC"
+        # dynamic all the same: the second day did not clobber the first
+        assert spark.read.parquet(str(tmp_path / "out")).count() == 40
+        lake = str(tmp_path / "lake")
+        df = spark.range(4).selectExpr("id", "CAST(id % 2 AS STRING) AS ds")
+        write_partitioned_parquet(df, lake)
+        write_partitioned_parquet(df.filter("ds = '0'"), lake)
+        assert spark.conf.get(key) == "STATIC"
+        assert spark.read.parquet(lake).count() == 4
+        # and a static overwrite in the same session still truncates
+        df.filter("ds = '1'").write.mode("overwrite").partitionBy("ds").parquet(lake)
+        assert spark.read.parquet(lake).count() == 2
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_pipeline_metrics_and_row_count(spark, tmp_path):
