@@ -49,11 +49,11 @@ class PipelineResult:
     quarantined_rows_path: str | None = None
     #: run observability: wall seconds per stage. ``checks_s`` covers the
     #: checks run before the write: the fused DQ scan for non-snapshot
-    #: sinks, only the non-observable checks for snapshot sinks (plus the
-    #: offender count and write in rows mode). ``write_s`` covers the
-    #: sink write (for snapshot sinks the write the remaining checks are
-    #: observed on, and its manifest commit) and post-publish
-    #: maintenance; ``plan_s`` is driver-side plan construction
+    #: sinks, only the non-observable checks for snapshot sinks. ``write_s``
+    #: covers the sink write (for snapshot sinks the write the remaining
+    #: checks are observed on, and its manifest commit), the rows-mode
+    #: offender write and post-publish maintenance; ``plan_s`` is
+    #: driver-side plan construction
     #: (source+transforms are lazy). The reference scattered this across
     #: Airflow task logs and the XCom metadata DB; here it's a plain field
     #: on the result.
@@ -886,20 +886,42 @@ def compile_pipeline(
         base = spec.destination.path
         published = quarantined = quarantined_rows = None
         n_bad_rows = 0
+        persisted = seen = bad = None
         checks = [Check.from_dict(c) for c in spec.checks]
         if spec.quality_mode == "rows":
             # Per-row checks divert only offending rows (tagged with the
             # checks they broke); table-level checks then gate the clean
-            # remainder with the usual batch branch.
+            # remainder with the usual batch branch, and the offenders
+            # are written after it.
+            from pyspark.sql import Observation
+            from pyspark.sql import functions as F
+
             from ..operators.quality import ROW_CHECKS, split_by_checks
 
             row_checks = [c for c in checks if c.check_type in ROW_CHECKS]
             checks = [c for c in checks if c.check_type not in ROW_CHECKS]
-            good, bad = split_by_checks(df, row_checks)
-            n_bad_rows = bad.count()
-            if base and n_bad_rows:
-                quarantined_rows = f"{base}__quarantine"
-                _write_sink(bad, spec, quarantined_rows, ds)
+            bare_scan = (
+                spec.source.type in ("file", "table")
+                and not spec.transformations
+                and transform is None
+            )
+            if not bare_scan:
+                # The clean side and the offenders are two evaluations of
+                # the lineage. Cache it unless it is a plain file scan,
+                # so the source and transforms run once and a
+                # nondeterministic transform (a dropDuplicates on a
+                # column subset keeps an arbitrary survivor) cannot
+                # route a row to both sides or neither. A plain scan is
+                # not cached: each side re-reads only its own pruned
+                # columns.
+                df = persisted = df.persist()
+            # the input row count rides the first job over the clean
+            # side; offenders = input - clean, with no count job of
+            # their own
+            seen = Observation()
+            good, bad = split_by_checks(
+                df.observe(seen, F.count(F.lit(1)).alias("n")), row_checks
+            )
             df = good
         # Snapshot sinks write once (write-audit-publish): the batch is
         # staged into an unreferenced data dir with every observable
@@ -947,6 +969,13 @@ def compile_pipeline(
                 commit_snapshot(staged, published or quarantined)
             else:
                 _write_sink(df, spec, published or quarantined, ds)
+        if seen is not None:
+            n_bad_rows = seen.get["n"] - report.n_rows
+            if base and n_bad_rows:
+                quarantined_rows = f"{base}__quarantine"
+                _write_sink(bad, spec, quarantined_rows, ds)
+        if persisted is not None:
+            persisted.unpersist()
         # Post-publish lake maintenance (round 8): the self-service
         # spec can ask for small-file compaction of the table it just
         # published — the audit→compact loop (operators/layout.py

@@ -143,6 +143,9 @@ class StagedSnapshot:
     partition_by: tuple[str, ...]
     #: the metric row observed on the write ({} when nothing was observed)
     observed: dict
+    #: dirs the write itself created (``base_dir`` and/or its ``data/``),
+    #: deepest first: the only ones a cross-table commit may remove
+    made: tuple[str, ...]
 
 
 def stage_snapshot(
@@ -169,6 +172,11 @@ def stage_snapshot(
     if format not in ("parquet", "orc"):
         raise ValueError(f"unknown snapshot format: {format!r}")
     rel = os.path.join(_DATA_DIR, uuid.uuid4().hex)
+    made = tuple(
+        d
+        for d in (os.path.join(base_dir, _DATA_DIR), base_dir)
+        if not os.path.isdir(d)
+    )
     obs = Observation() if observe else None
     out = df.observe(obs, *observe) if observe else df
     writer = out.write.mode("error")
@@ -183,6 +191,7 @@ def stage_snapshot(
         format,
         tuple(partition_by),
         obs.get if observe else {},
+        made,
     )
 
 
@@ -196,19 +205,27 @@ def commit_snapshot(
     the table it was staged under); returns the version number.
 
     Committing to another table first moves the staged dir under it (one
-    rename, no data rewrite), so a gate decided after the write can route
-    the batch to a quarantine table instead. The move takes along no
-    manifest; directories it leaves empty under the staged table are
-    removed."""
+    ``os.rename``, no data rewrite), so a gate decided after the write can
+    route the batch to a quarantine table instead. That route needs a
+    local/POSIX path, where the rename is atomic; on an object store it
+    would be a copy and delete of the whole batch, so it raises there.
+    Only the dirs the stage itself created are removed afterwards, and
+    only while empty: a table dir a user made beforehand stays, and so
+    does a ``data/`` dir another writer is staging into."""
     target = base_dir or staged.base_dir
     if target != staged.base_dir:
         src = os.path.join(staged.base_dir, staged.rel)
+        if not os.path.isdir(src):
+            raise ValueError(
+                "committing a staged snapshot to another table renames "
+                f"its data dir; {src!r} is not a local directory"
+            )
         dst = os.path.join(target, staged.rel)
         os.makedirs(os.path.dirname(dst), exist_ok=True)
         os.rename(src, dst)
-        for d in (os.path.dirname(src), staged.base_dir):
+        for d in staged.made:
             try:
-                os.rmdir(d)  # only ever removes an emptied dir
+                os.rmdir(d)  # fails, and keeps d, unless it is empty
             except OSError:
                 break
     mode, rel = staged.mode, staged.rel

@@ -350,6 +350,103 @@ def test_snapshot_sink_exact_unique_gates_before_the_write(spark, tmp_path):
     assert read_snapshot(spark, good.published_path).count() == 30
 
 
+def test_failed_gate_keeps_a_publish_dir_made_beforehand(spark, tmp_path):
+    """Routing a staged batch to quarantine removes only the dirs the
+    stage created: an empty publish dir the user made first stays."""
+    import os
+
+    from data_engineering_etl_self_service_spark.sources.snapshots import (
+        snapshot_versions,
+    )
+
+    src = str(tmp_path / "in.parquet")
+    spark.range(5).write.parquet(src)
+    out = tmp_path / "made"
+    out.mkdir()
+    res = run_pipeline(
+        spark,
+        _snapshot_spec(src, str(out), [{"check_type": "min_row_count", "threshold": 6}]),
+    )
+    assert not res.passed
+    assert os.listdir(out) == []
+    assert snapshot_versions(res.quarantined_path) == [1]
+
+
+def test_rows_mode_transform_runs_once(spark, tmp_path):
+    """Rows mode caches a transformed lineage: the offenders, the table
+    checks and the clean write all read one evaluation, so a Python UDF
+    in the transform runs once per input row and every row lands on
+    exactly one side. The offender count is observed, not counted by a
+    job of its own, and matches the rows written."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from data_engineering_etl_self_service_spark.plans.pipeline import (
+        compile_pipeline,
+    )
+
+    src = str(tmp_path / "in.parquet")
+    spark.range(120).selectExpr(
+        "id", "IF(id % 10 = 0, NULL, id) AS v"
+    ).write.parquet(src)
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def bump(x):
+        calls.add(1)
+        return x
+
+    def spec(out, checks):
+        return spec_from_dict(
+            {
+                "pipeline_info": {"name": "rows_once"},
+                "source": {"type": "file", "format": "parquet", "path": src},
+                "data_quality_mode": "rows",
+                "destination": {"type": "parquet", "path": out},
+                "data_quality_checks": checks,
+            }
+        )
+
+    out = str(tmp_path / "out")
+    res = compile_pipeline(
+        spec(out, [
+            {"check_type": "non_null", "column": "echo"},
+            {"check_type": "min_row_count", "threshold": 1},
+        ]),
+        transform=lambda df: df.withColumn("echo", bump("v")),
+    )(spark)
+    assert res.passed and res.n_rows == 108
+    assert calls.value == 120
+    assert res.metrics["rows_quarantined"] == 12
+    quar = spark.read.parquet(res.quarantined_rows_path)
+    pub = spark.read.parquet(res.published_path)
+    assert quar.count() == 12
+    ids = quar.select("id").union(pub.select("id")).collect()
+    assert sorted(r.id for r in ids) == list(range(120))
+
+    # a plain scan with no offenders observes zero and writes no park
+    clean = str(tmp_path / "clean")
+    ok = compile_pipeline(
+        spec(clean, [{"check_type": "non_null", "column": "id"}])
+    )(spark)
+    assert ok.passed and ok.n_rows == 120
+    assert ok.metrics["rows_quarantined"] == 0
+    assert ok.quarantined_rows_path is None
+    assert not os.path.exists(clean + "__quarantine")
+
+    # every row an offender: the clean side is empty, and the input
+    # count is still observed on it
+    none = str(tmp_path / "none")
+    all_bad = compile_pipeline(
+        spec(none, [{"check_type": "non_null", "column": "gone"}]),
+        transform=lambda df: df.withColumn("gone", F.lit(None).cast("long")),
+    )(spark)
+    assert all_bad.n_rows == 0
+    assert all_bad.metrics["rows_quarantined"] == 120
+    assert spark.read.parquet(all_bad.quarantined_rows_path).count() == 120
+
+
 def test_partitioned_sink_leaves_session_overwrite_mode(spark, tmp_path):
     """Dynamic partition overwrite is a per-write option: after a
     partitioned pipeline run (and the files.py lake sink) the session's
