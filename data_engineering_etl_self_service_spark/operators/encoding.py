@@ -97,14 +97,8 @@ def sniff_decode(raw: bytes) -> dict:
 
 
 #: compression magic → decoder. gzip via zlib wbits=31 (header parsing
-#: included); bzip2/xz via their stdlib modules; zstd/lz4 via pyarrow's
-#: native codec (libzstd / liblz4 — C-speed, the only sane default on
-#: the bulk arrival path) with the pure RFC 8878 / lz4-frame decoders
-#: (operators/zstd.py, operators/lz4.py) as the no-pyarrow fallback —
-#: every sniffed codec still inflates with NO optional dependency, and
-#: the two-implementation correctness posture lives where it belongs:
-#: the byte-parity tests in tests/test_zstd.py / tests/test_lz4.py
-#: that decode the same frames both ways (VERDICT r7 #1).
+#: included); bzip2/xz via their stdlib modules; zstd/lz4 frames via
+#: pyarrow's native codec (libzstd / liblz4), a core dependency.
 _MAGICS = [
     (b"\x1f\x8b", "gzip"),
     (b"BZh", "bzip2"),
@@ -112,18 +106,6 @@ _MAGICS = [
     (b"\x28\xb5\x2f\xfd", "zstd"),
     (b"\x04\x22\x4d\x18", "lz4"),
 ]
-
-
-def _native_decompress(raw: bytes, codec: str) -> bytes:
-    """Inflate ``raw`` with pyarrow's native codec (libzstd/liblz4).
-    Raises on absent pyarrow or a failed decode — callers fall back to
-    the pure-Python decoder. Kept separate so tests can monkeypatch the
-    native path away and exercise the fallback ordering."""
-    import io
-
-    import pyarrow as pa
-
-    return pa.input_stream(io.BytesIO(raw), compression=codec).read()
 
 
 def sniff_decompress(raw: bytes) -> dict:
@@ -138,9 +120,9 @@ def sniff_decompress(raw: bytes) -> dict:
     be silent data loss (review r6c). Never raises. A zstd frame that
     names an external DICTIONARY is failed up front with a specific
     actionable ``error`` ("requires its external dictionary") instead
-    of the generic decode failure both libzstd and the pure decoder
-    would report (VERDICT r8 #6). Composes with :func:`sniff_decode`:
-    bytes → decompress → charset → text is the whole front door.
+    of the generic decode failure libzstd would report (VERDICT r8 #6).
+    Composes with :func:`sniff_decode`: bytes → decompress → charset →
+    text is the whole front door.
     """
     comp = "none"
     for magic, name in _MAGICS:
@@ -167,9 +149,9 @@ def sniff_decompress(raw: bytes) -> dict:
 
             return {"compression": comp, "ok": True, "data": lzma.decompress(raw)}
         if comp == "zstd":
-            # dictionary frames fail BOTH decoders with an opaque
-            # "corrupt" — probe the header first so the failure names
-            # the real cause and the missing piece (VERDICT r8 #6)
+            # dictionary frames fail libzstd with an opaque "corrupt" —
+            # probe the header first so the failure names the real
+            # cause and the missing piece (VERDICT r8 #6)
             from .zstd import zstd_dictionary_id
 
             did = zstd_dictionary_id(raw)
@@ -179,32 +161,19 @@ def sniff_decompress(raw: bytes) -> dict:
                     "requires its external dictionary; external "
                     "dictionaries are unsupported"
                 )
-            # native libzstd first — the arrival front door must not
-            # pay pure-Python per-byte cost when the C codec is in the
-            # container; the pure RFC 8878 decoder is the no-pyarrow
-            # fallback (and the corrupt-frame second opinion)
-            try:
-                data = _native_decompress(raw, "zstd")
-            except Exception:
-                from .zstd import zstd_decompress
+        # zstd / lz4 frames
+        import io
 
-                data = zstd_decompress(raw)
-            return {"compression": comp, "ok": True, "data": data}
-        if comp == "lz4":
-            try:
-                data = _native_decompress(raw, "lz4")
-            except Exception:
-                from .lz4 import lz4_decompress
+        import pyarrow as pa
 
-                data = lz4_decompress(raw)
-            return {"compression": comp, "ok": True, "data": data}
+        data = pa.input_stream(io.BytesIO(raw), compression=comp).read()
+        return {"compression": comp, "ok": True, "data": data}
     except Exception as ex:
-        # sniff false-positive, corrupt container, dictionary frame, or
-        # absent optional codec (pyarrow): keep the bytes, name the why
+        # sniff false-positive, corrupt container or dictionary frame:
+        # keep the bytes, name the why
         return {
             "compression": comp,
             "ok": False,
             "data": raw,
             "error": str(ex),
         }
-    raise AssertionError("unreachable: every sniffed codec returns")

@@ -29,9 +29,9 @@ ORC file tail layout (ORC spec v1):
 Chunked compression framing: each chunk is a 3-byte little-endian
 header ``(length << 1) | is_original`` followed by ``length`` bytes —
 original chunks pass through, compressed ones inflate with the
-PostScript's codec (ZLIB = raw DEFLATE, SNAPPY/LZ4 = raw blocks, ZSTD =
-frames; the pure decoders from operators/snappy.py, lz4.py and zstd.py
-keep this dependency-free, with libzstd first on the zstd path).
+PostScript's codec (ZLIB = raw DEFLATE via zlib, SNAPPY/LZ4 = raw
+blocks, ZSTD = frames, all three via pyarrow), each under the stream's
+remaining output bound.
 
 Stats decoded per column kind: IntegerStatistics (zigzag sint64
 min/max/sum), DoubleStatistics, StringStatistics (min/max plus the
@@ -170,30 +170,59 @@ def _packed_u32(fields: dict, f: int) -> list[int]:
 
 # ------------------------------------------------------- stream inflation
 
-def _inflate_chunk(chunk: bytes, codec: str) -> bytes:
-    if codec == "zlib":
-        import zlib
+#: one-block LZ4 frame prefix for a raw ORC LZ4 chunk: magic, FLG 0x60
+#: (version 01, independent blocks, no checksums, no content size), BD
+#: 0x70 (4 MiB max block) and the header check byte
+#: ``(xxh32(b"\x60\x70") >> 8) & 0xFF == 0x73``
+_LZ4_FRAME_HEAD = b"\x04\x22\x4d\x18\x60\x70\x73"
 
-        return zlib.decompress(chunk, -15)  # raw DEFLATE per ORC spec
-    if codec == "snappy":
-        from .snappy import snappy_decompress
 
-        return snappy_decompress(chunk)
-    if codec == "zstd":
-        # the pure decoder, not libzstd: it takes an OUTPUT CEILING, so
-        # a hostile tail declaring a many-GB chunk fails the bound
-        # BEFORE materializing (review r9); tails are KB-to-MB, so the
-        # pure decoder's throughput is immaterial here
-        from .zstd import zstd_decompress
+def _inflate_chunk(chunk: bytes, codec: str, bound: int) -> bytes:
+    """Inflate one compressed chunk. A chunk whose output passes
+    ``bound`` bytes fails with ValueError BEFORE that output is
+    materialized, so a hostile tail declaring a many-GB chunk cannot
+    allocate it (review r9); corrupt chunks raise ValueError too."""
+    import io
+    import zlib
 
-        return zstd_decompress(chunk, max_out=_MAX_STREAM)
-    if codec == "lz4":
-        from .lz4 import _decode_block
+    import pyarrow as pa
 
-        out = bytearray()
-        _decode_block(chunk, out, 0)
-        return bytes(out)
-    raise ValueError(f"orc: unsupported compression codec {codec!r}")
+    try:
+        if codec == "zlib":
+            d = zlib.decompressobj(-15)  # raw DEFLATE per ORC spec
+            out = d.decompress(chunk, bound + 1)
+            if len(out) <= bound and not d.eof:
+                raise ValueError("orc: truncated zlib chunk")
+        elif codec == "snappy":
+            # raw snappy leads with its output size as a varint
+            n = _uvarint(chunk, 0)[0]
+            if n > bound:
+                raise ValueError(
+                    f"orc: snappy chunk exceeds its {bound}-byte bound"
+                )
+            return pa.decompress(
+                chunk, decompressed_size=n, codec="snappy", asbytes=True
+            )
+        elif codec in ("zstd", "lz4"):
+            if codec == "lz4":
+                # a raw LZ4 block carries no output size and pyarrow's
+                # lz4_raw cannot stream: frame it as one block so the
+                # bounded read below applies
+                chunk = (
+                    _LZ4_FRAME_HEAD
+                    + len(chunk).to_bytes(4, "little")
+                    + chunk
+                    + bytes(4)
+                )
+            stream = pa.input_stream(io.BytesIO(chunk), compression=codec)
+            out = stream.read(bound + 1)
+        else:
+            raise ValueError(f"orc: unsupported compression codec {codec!r}")
+    except (OSError, zlib.error) as ex:
+        raise ValueError(f"orc: corrupt {codec} chunk: {ex}") from ex
+    if len(out) > bound:
+        raise ValueError(f"orc: {codec} chunk exceeds its {bound}-byte bound")
+    return out
 
 
 def _orc_stream(buf: bytes, codec: str) -> bytes:
@@ -215,7 +244,7 @@ def _orc_stream(buf: bytes, codec: str) -> bytes:
         if h & 1:
             out += chunk
         else:
-            out += _inflate_chunk(chunk, codec)
+            out += _inflate_chunk(chunk, codec, _MAX_STREAM - len(out))
         if len(out) > _MAX_STREAM:
             raise ValueError(
                 f"orc: metadata stream exceeds {_MAX_STREAM} bytes"

@@ -1,16 +1,11 @@
-"""xxHash32 / xxHash64 — the checksum primitives of the zstd and lz4
-frame formats (public spec: github.com/Cyan4973/xxHash, XXH32/XXH64).
+"""xxHash64 (public spec: github.com/Cyan4973/xxHash, XXH64).
 
-Pure-Python, used by:
-
-- ``operators/zstd.py`` — zstd's optional Content_Checksum is the low
-  32 bits of XXH64(content, seed=0); with this module the decoder
-  VERIFIES it instead of consuming it blind;
-- ``operators/lz4.py`` — lz4 frames checksum the header (XXH32 >> 8),
-  optionally each block, and optionally the content (XXH32).
+Pure-Python, used by ``operators/parquet_bloom.py``: Parquet's
+split-block bloom filters hash each value with XXH64(seed=0), so a
+filter probe must reproduce the writer's hash exactly.
 
 Correctness is pinned to the reference test vectors (the sanity
-vectors XXH's own test suite uses) in tests/test_zstd.py.
+vectors XXH's own test suite uses) in tests/test_parquet_bloom.py.
 """
 
 from __future__ import annotations
@@ -22,20 +17,9 @@ _P64_3 = 0x165667B19E3779F9
 _P64_4 = 0x85EBCA77C2B2AE63
 _P64_5 = 0x27D4EB2F165667C5
 
-_M32 = (1 << 32) - 1
-_P32_1 = 0x9E3779B1
-_P32_2 = 0x85EBCA77
-_P32_3 = 0xC2B2AE3D
-_P32_4 = 0x27D4EB2F
-_P32_5 = 0x165667B1
-
 
 def _rotl64(x: int, r: int) -> int:
     return ((x << r) | (x >> (64 - r))) & _M64
-
-
-def _rotl32(x: int, r: int) -> int:
-    return ((x << r) | (x >> (32 - r))) & _M32
 
 
 def _round64(acc: int, inp: int) -> int:
@@ -98,55 +82,4 @@ def xxh64(data: bytes, seed: int = 0) -> int:
     h ^= h >> 29
     h = (h * _P64_3) & _M64
     h ^= h >> 32
-    return h
-
-
-def xxh32(data: bytes, seed: int = 0) -> int:
-    n = len(data)
-    pos = 0
-    if n >= 16:
-        v1 = (seed + _P32_1 + _P32_2) & _M32
-        v2 = (seed + _P32_2) & _M32
-        v3 = seed & _M32
-        v4 = (seed - _P32_1) & _M32
-        while pos + 16 <= n:
-            for i, v in enumerate((v1, v2, v3, v4)):
-                v = (
-                    v
-                    + int.from_bytes(
-                        data[pos + 4 * i : pos + 4 * i + 4], "little"
-                    )
-                    * _P32_2
-                ) & _M32
-                v = (_rotl32(v, 13) * _P32_1) & _M32
-                if i == 0:
-                    v1 = v
-                elif i == 1:
-                    v2 = v
-                elif i == 2:
-                    v3 = v
-                else:
-                    v4 = v
-            pos += 16
-        h = (
-            _rotl32(v1, 1) + _rotl32(v2, 7) + _rotl32(v3, 12) + _rotl32(v4, 18)
-        ) & _M32
-    else:
-        h = (seed + _P32_5) & _M32
-    h = (h + n) & _M32
-    while pos + 4 <= n:
-        h = (
-            h + int.from_bytes(data[pos : pos + 4], "little") * _P32_3
-        ) & _M32
-        h = (_rotl32(h, 17) * _P32_4) & _M32
-        pos += 4
-    while pos < n:
-        h = (h + data[pos] * _P32_5) & _M32
-        h = (_rotl32(h, 11) * _P32_1) & _M32
-        pos += 1
-    h ^= h >> 15
-    h = (h * _P32_2) & _M32
-    h ^= h >> 13
-    h = (h * _P32_3) & _M32
-    h ^= h >> 16
     return h

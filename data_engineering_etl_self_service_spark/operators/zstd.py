@@ -1,44 +1,16 @@
-"""Pure-Python Zstandard frame decoder — RFC 8878 subset.
+"""Zstandard frame-header probe.
 
-Closes the last undecodable arrival format in ``sniff_decompress``
-(operators/encoding.py): zstd payloads were sniffed-but-passthrough
-because CPython has no stdlib codec. This decoder implements the
-documented subset from the public RFC 8878 / zstd format spec:
+zstd payloads decode through pyarrow's native codec (libzstd). libzstd
+fails a frame that names an external dictionary with an opaque
+"corrupt" error, so ``sniff_decompress`` (operators/encoding.py) and
+the Avro OCF reader (sources/avro_ocf.py) first read the frame header
+here and raise an actionable "requires its external dictionary" error
+instead.
 
-- **Frames**: standard zstd frames (magic 0x28B52FFD), single- and
-  multi-block, with or without Single_Segment / Frame_Content_Size /
-  Content_Checksum (VERIFIED when present: low 32 bits of
-  XXH64(content) via operators/xxhash.py). Skippable frames
-  (0x184D2A5?) are skipped per spec. Dictionary frames are rejected
-  loudly (Dictionary_ID present → ValueError), not mis-decoded.
-- **Blocks**: Raw, RLE, and Compressed.
-- **Literals**: Raw, RLE, Huffman-compressed (1-stream and 4-stream
-  with jump table), and Treeless (reuse of the frame's previous
-  Huffman table).
-- **Huffman**: direct (4-bit packed) and FSE-compressed weight
-  descriptions; canonical prefix-code table construction per spec
-  (weights ascending, natural symbol order within a weight, implied
-  last weight completing the power of two).
-- **Sequences**: all four symbol-compression modes (Predefined, RLE,
-  FSE_Compressed, Repeat) for each of the LL/OF/ML tables, the
-  RFC's predefined distributions, the full LL/ML code→baseline+bits
-  tables, the three-slot repeat-offset history with its
-  literals_length==0 special case, and overlapping match copies.
-
-Bitstream mechanics: FSE table descriptions read FORWARD
-little-endian; Huffman literal streams and the sequence bitstream
-read BACKWARD from a 1-bit sentinel in the last byte — both are
-implemented over Python big-ints. The hot path for bulk data is
-pyarrow's native codec (libzstd), which ``sniff_decompress`` tries
-FIRST (round 8); this pure decoder is the no-pyarrow fallback and
-the independent implementation the parity tests decode against —
-measured ~166× slower per byte than libzstd (SCALE.md), which is
-exactly why it is not the default.
-
-Verification: byte-for-byte parity with pyarrow's libzstd compressor
-across sizes, entropy profiles, and compression levels 1-19
-(tests/test_zstd.py), plus structural-corruption fuzz asserting
-loud failure, never wrong output.
+Header layout per RFC 8878: magic 0x28B52FFD, then the
+Frame_Header_Descriptor whose low two bits size the Dictionary_ID
+field; skippable frames (magic 0x184D2A50-0x184D2A5F plus a 4-byte
+length) are skipped to reach the first real frame.
 """
 
 from __future__ import annotations
@@ -48,536 +20,6 @@ import struct
 ZSTD_MAGIC = 0xFD2FB528
 SKIPPABLE_LO = 0x184D2A50
 SKIPPABLE_HI = 0x184D2A5F
-
-
-class _FwdBits:
-    """Forward little-endian bit reader (FSE table descriptions)."""
-
-    __slots__ = ("buf", "bitpos")
-
-    def __init__(self, buf: bytes):
-        self.buf = buf
-        self.bitpos = 0
-
-    def peek(self, n: int) -> int:
-        end = (self.bitpos + n + 7) // 8
-        if end > len(self.buf):
-            chunk = self.buf[self.bitpos // 8 :] + b"\x00" * 8
-        else:
-            chunk = self.buf[self.bitpos // 8 : end]
-        v = int.from_bytes(chunk, "little") >> (self.bitpos % 8)
-        return v & ((1 << n) - 1)
-
-    def read(self, n: int) -> int:
-        v = self.peek(n)
-        self.bitpos += n
-        return v
-
-    def bytes_consumed(self) -> int:
-        return (self.bitpos + 7) // 8
-
-
-class _BackBits:
-    """Backward bit reader: a zstd entropy stream ends with a 1-bit
-    sentinel in its LAST byte's highest set position; bits are then
-    consumed from that point toward byte 0, most-significant-first
-    within the little-endian packing."""
-
-    __slots__ = ("val", "bitpos")
-
-    def __init__(self, buf: bytes):
-        if not buf:
-            raise ValueError("zstd: empty bitstream")
-        last = buf[-1]
-        if last == 0:
-            raise ValueError("zstd: bitstream missing sentinel bit")
-        self.val = int.from_bytes(buf, "little")
-        self.bitpos = (len(buf) - 1) * 8 + last.bit_length() - 1
-
-    def read(self, n: int) -> int:
-        if n == 0:
-            return 0
-        self.bitpos -= n
-        if self.bitpos < -64:  # allow spec'd zero-fill past the start
-            raise ValueError("zstd: bitstream over-read")
-        if self.bitpos <= -n:
-            return 0
-        if self.bitpos < 0:
-            return (self.val << -self.bitpos) & ((1 << n) - 1)
-        return (self.val >> self.bitpos) & ((1 << n) - 1)
-
-
-# =========================================================================
-# FSE
-# =========================================================================
-
-
-def _fse_read_distribution(
-    buf: bytes, max_accuracy: int
-) -> tuple[list[int], int, int]:
-    """Parse an FSE table description (forward bitstream) →
-    (normalized counts with -1 for less-than-one, accuracy_log,
-    bytes consumed)."""
-    bits = _FwdBits(buf)
-    accuracy_log = bits.read(4) + 5
-    if accuracy_log > max_accuracy:
-        raise ValueError("zstd: FSE accuracy log too large")
-    remaining = (1 << accuracy_log) + 1
-    counts: list[int] = []
-    previous0 = False
-    while remaining > 1:
-        if previous0:
-            # runs of zero-probability symbols, 2-bit repeat flags
-            while True:
-                rep = bits.read(2)
-                counts.extend([0] * rep)
-                if rep != 3:
-                    break
-            previous0 = False
-            continue
-        threshold = 1 << (remaining.bit_length() - 1)
-        maxv = 2 * threshold - 1 - remaining
-        low = bits.peek(remaining.bit_length() - 1)
-        if low < maxv:
-            bits.read(remaining.bit_length() - 1)
-            count = low
-        else:
-            count = bits.read(remaining.bit_length())
-            if count >= threshold:
-                count -= maxv
-        count -= 1  # shifted encoding: -1 means "less than one"
-        remaining -= -count if count < 0 else count
-        counts.append(count)
-        previous0 = count == 0
-        if len(counts) > 256:
-            raise ValueError("zstd: FSE distribution runaway")
-    if remaining != 1:
-        raise ValueError("zstd: FSE distribution does not sum")
-    return counts, accuracy_log, bits.bytes_consumed()
-
-
-def _fse_build_table(counts: list[int], accuracy_log: int):
-    """Spec table-spread + state transitions → per-state
-    (symbol, nb_bits, baseline)."""
-    size = 1 << accuracy_log
-    symbols = [0] * size
-    high = size - 1
-    for sym, c in enumerate(counts):
-        if c == -1:
-            symbols[high] = sym
-            high -= 1
-    pos = 0
-    step = (size >> 1) + (size >> 3) + 3
-    mask = size - 1
-    for sym, c in enumerate(counts):
-        for _ in range(max(c, 0)):
-            symbols[pos] = sym
-            pos = (pos + step) & mask
-            while pos > high:
-                pos = (pos + step) & mask
-    if pos != 0:
-        raise ValueError("zstd: FSE table spread incomplete")
-    nxt = [1 if c == -1 else c for c in counts]
-    table = [None] * size
-    for state in range(size):
-        sym = symbols[state]
-        x = nxt[sym]
-        nxt[sym] += 1
-        nb = accuracy_log - (x.bit_length() - 1)
-        table[state] = (sym, nb, (x << nb) - size)
-    return table
-
-
-class _FseState:
-    __slots__ = ("table", "state")
-
-    def __init__(self, table, bits: _BackBits, accuracy_log: int):
-        self.table = table
-        self.state = bits.read(accuracy_log)
-
-    @property
-    def symbol(self) -> int:
-        return self.table[self.state][0]
-
-    def update(self, bits: _BackBits) -> None:
-        _, nb, base = self.table[self.state]
-        self.state = base + bits.read(nb)
-
-
-# =========================================================================
-# Huffman
-# =========================================================================
-
-
-def _huffman_from_weights(weights: list[int]):
-    """Weights (last one implied) → flat decode table
-    [(symbol, nb_bits)] of size 2^max_bits, plus max_bits."""
-    # spec bounds: max code length 11 → max weight 11, and weights past
-    # that bound would allocate 2^weight table slots — reject BEFORE
-    # summing so a ~50-byte crafted frame can't OOM the executor
-    # (review r7; the FSE weight path can emit symbols up to 255)
-    if any(w > 11 or w < 0 for w in weights):
-        raise ValueError("zstd: Huffman weight exceeds spec bound")
-    total = sum((1 << (w - 1)) for w in weights if w > 0)
-    if total == 0:
-        raise ValueError("zstd: empty Huffman weights")
-    # last weight completes to the nearest power of 2 STRICTLY above
-    # (it must be >= 1), so Max_Number_Bits is total's bit length
-    max_bits = total.bit_length()
-    if max_bits > 11:
-        raise ValueError("zstd: Huffman table exceeds 11-bit spec bound")
-    left = (1 << max_bits) - total
-    # implied last weight must itself be a power of two
-    if left & (left - 1):
-        raise ValueError("zstd: Huffman weights do not complete")
-    weights = weights + [left.bit_length()]  # 2^(w-1) = left
-    size = 1 << max_bits
-    table = [None] * size
-    pos = 0
-    for w in range(1, max_bits + 1):
-        for sym, sw in enumerate(weights):
-            if sw == w:
-                n = 1 << (w - 1)
-                nb = max_bits + 1 - w
-                for _ in range(n):
-                    table[pos] = (sym, nb)
-                    pos += 1
-    if pos != size:
-        raise ValueError("zstd: Huffman table incomplete")
-    return table, max_bits
-
-
-def _read_huffman_description(buf: bytes):
-    """Huffman-tree description → (decode_table, max_bits, consumed)."""
-    if not buf:
-        raise ValueError("zstd: empty Huffman description")
-    hdr = buf[0]
-    if hdr >= 128:  # direct: 4-bit packed weights
-        n_weights = hdr - 127
-        nbytes = (n_weights + 1) // 2
-        raw = buf[1 : 1 + nbytes]
-        if len(raw) != nbytes:
-            raise ValueError("zstd: truncated Huffman weights")
-        weights = []
-        for i in range(n_weights):
-            b = raw[i // 2]
-            weights.append((b >> 4) if i % 2 == 0 else (b & 0xF))
-        return (*_huffman_from_weights(weights), 1 + nbytes)
-    # FSE-compressed weights: hdr = compressed size
-    comp = buf[1 : 1 + hdr]
-    if len(comp) != hdr:
-        raise ValueError("zstd: truncated Huffman FSE stream")
-    counts, al, used = _fse_read_distribution(comp, 6)
-    table = _fse_build_table(counts, al)
-    bits = _BackBits(comp[used:])
-    even = _FseState(table, bits, al)
-    odd = _FseState(table, bits, al)
-    weights: list[int] = []
-    # two interleaved states, each emits then updates; stop at 255 max
-    while True:
-        weights.append(even.symbol)
-        if bits.bitpos < 0:
-            break
-        even.update(bits)
-        weights.append(odd.symbol)
-        if bits.bitpos < 0:
-            break
-        odd.update(bits)
-        if len(weights) > 255:
-            raise ValueError("zstd: Huffman weight runaway")
-    return (*_huffman_from_weights(weights), 1 + hdr)
-
-
-def _huffman_decode_stream(
-    table, max_bits: int, buf: bytes, n_out: int
-) -> bytes:
-    bits = _BackBits(buf)
-    out = bytearray()
-    while len(out) < n_out:
-        # peek max_bits (zero-filled past the front per spec), consume nb
-        idx = bits.read(max_bits)
-        sym, nb = table[idx]
-        out.append(sym)
-        bits.bitpos += max_bits - nb  # consumed only nb of the peeked bits
-        if bits.bitpos < -32:
-            raise ValueError("zstd: literal stream over-read")
-    return bytes(out)
-
-
-# =========================================================================
-# Sequences: predefined distributions + code tables (RFC 8878 §3.1.1.3.2)
-# =========================================================================
-
-_LL_PREDEF = [
-    4, 3, 2, 2, 2, 2, 2, 2, 2, 2, 2, 2, 2, 1, 1, 1, 2, 2, 2, 2, 2, 2,
-    2, 2, 2, 3, 2, 1, 1, 1, 1, 1, -1, -1, -1, -1,
-]
-_ML_PREDEF = [
-    1, 4, 3, 2, 2, 2, 2, 2, 2, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1,
-    1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1,
-    1, 1, -1, -1, -1, -1, -1, -1, -1,
-]
-_OF_PREDEF = [
-    1, 1, 1, 1, 1, 1, 2, 2, 2, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1,
-    1, 1, -1, -1, -1, -1, -1,
-]
-
-_LL_BASE = list(range(16)) + [
-    16, 18, 20, 22, 24, 28, 32, 40, 48, 64, 128, 256, 512, 1024, 2048,
-    4096, 8192, 16384, 32768, 65536,
-]
-_LL_BITS = [0] * 16 + [
-    1, 1, 1, 1, 2, 2, 3, 3, 4, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15, 16,
-]
-_ML_BASE = [c + 3 for c in range(32)] + [
-    35, 37, 39, 41, 43, 47, 51, 59, 67, 83, 99, 131, 259, 515, 1027,
-    2051, 4099, 8195, 16387, 32771, 65539,
-]
-_ML_BITS = [0] * 32 + [
-    1, 1, 1, 1, 2, 2, 3, 3, 4, 4, 5, 7, 8, 9, 10, 11, 12, 13, 14, 15, 16,
-]
-
-_PREDEF_TABLES = {}  # built lazily: kind -> (table, accuracy_log)
-
-
-def _predef(kind: str):
-    if kind not in _PREDEF_TABLES:
-        dist, al = {
-            "ll": (_LL_PREDEF, 6),
-            "ml": (_ML_PREDEF, 6),
-            "of": (_OF_PREDEF, 5),
-        }[kind]
-        _PREDEF_TABLES[kind] = (_fse_build_table(dist, al), al)
-    return _PREDEF_TABLES[kind]
-
-
-def _rle_table(symbol: int):
-    """A 1-state FSE table that always emits ``symbol``, 0 bits."""
-    return [(symbol, 0, 0)], 0
-
-
-# =========================================================================
-# Block decode
-# =========================================================================
-
-
-class _FrameCtx:
-    """Per-frame mutable entropy state: repeat offsets, last Huffman
-    table (Treeless literals), last FSE tables (Repeat mode)."""
-
-    def __init__(self):
-        self.rep = [1, 4, 8]
-        self.huffman = None  # (table, max_bits)
-        self.fse = {"ll": None, "of": None, "ml": None}
-
-
-def _decode_literals(block: bytes, ctx: _FrameCtx) -> tuple[bytes, int]:
-    """Literals section → (literals, bytes consumed from block)."""
-    b0 = block[0]
-    ltype = b0 & 3
-    size_fmt = (b0 >> 2) & 3
-    if ltype in (0, 1):  # Raw / RLE
-        if size_fmt in (0, 2):
-            rsize = b0 >> 3
-            hlen = 1
-        elif size_fmt == 1:
-            rsize = (b0 >> 4) | (block[1] << 4)
-            hlen = 2
-        else:
-            rsize = (b0 >> 4) | (block[1] << 4) | (block[2] << 12)
-            hlen = 3
-        if ltype == 0:
-            lits = block[hlen : hlen + rsize]
-            if len(lits) != rsize:
-                raise ValueError("zstd: truncated raw literals")
-            return bytes(lits), hlen + rsize
-        return bytes([block[hlen]]) * rsize, hlen + 1
-    # Compressed (2) / Treeless (3)
-    if size_fmt == 0:
-        rsize = (b0 >> 4) | ((block[1] & 0x3F) << 4)
-        csize = (block[1] >> 6) | (block[2] << 2)
-        hlen, streams = 3, 1
-    elif size_fmt == 1:
-        rsize = (b0 >> 4) | ((block[1] & 0x3F) << 4)
-        csize = (block[1] >> 6) | (block[2] << 2)
-        hlen, streams = 3, 4
-    elif size_fmt == 2:
-        rsize = (b0 >> 4) | (block[1] << 4) | ((block[2] & 3) << 12)
-        csize = (block[2] >> 2) | (block[3] << 6)
-        hlen, streams = 4, 4
-    else:
-        rsize = (b0 >> 4) | (block[1] << 4) | ((block[2] & 0x3F) << 12)
-        csize = (block[2] >> 6) | (block[3] << 2) | (block[4] << 10)
-        hlen, streams = 5, 4
-    body = block[hlen : hlen + csize]
-    if len(body) != csize:
-        raise ValueError("zstd: truncated compressed literals")
-    if ltype == 2:
-        table, max_bits, used = _read_huffman_description(body)
-        ctx.huffman = (table, max_bits)
-        body = body[used:]
-    else:
-        if ctx.huffman is None:
-            raise ValueError("zstd: treeless literals with no prior table")
-        table, max_bits = ctx.huffman
-    if streams == 1:
-        lits = _huffman_decode_stream(table, max_bits, body, rsize)
-    else:
-        if len(body) < 6:
-            raise ValueError("zstd: missing 4-stream jump table")
-        s1, s2, s3 = struct.unpack("<HHH", body[:6])
-        rest = body[6:]
-        if s1 + s2 + s3 > len(rest):
-            raise ValueError("zstd: jump table exceeds section")
-        parts = [
-            rest[:s1],
-            rest[s1 : s1 + s2],
-            rest[s1 + s2 : s1 + s2 + s3],
-            rest[s1 + s2 + s3 :],
-        ]
-        per = (rsize + 3) // 4
-        sizes = [per, per, per, rsize - 3 * per]
-        if sizes[3] < 0:
-            raise ValueError("zstd: bad 4-stream regenerated size")
-        lits = b"".join(
-            _huffman_decode_stream(table, max_bits, p, n)
-            for p, n in zip(parts, sizes)
-        )
-    if len(lits) != rsize:
-        raise ValueError("zstd: literal size mismatch")
-    return lits, hlen + csize
-
-
-def _seq_table(mode: int, kind: str, buf: bytes, ctx: _FrameCtx, maxsym):
-    """One LL/OF/ML table per its 2-bit compression mode →
-    ((table, accuracy_log), bytes consumed)."""
-    if mode == 0:
-        t = _predef(kind)
-        ctx.fse[kind] = t
-        return t, 0
-    if mode == 1:
-        if not buf:
-            raise ValueError("zstd: missing RLE symbol")
-        if buf[0] > maxsym:
-            raise ValueError("zstd: RLE symbol out of range")
-        t = _rle_table(buf[0])
-        ctx.fse[kind] = t
-        return t, 1
-    if mode == 2:
-        counts, al, used = _fse_read_distribution(
-            buf, {"ll": 9, "of": 8, "ml": 9}[kind]
-        )
-        if len(counts) - 1 > maxsym:
-            raise ValueError("zstd: FSE symbol out of range")
-        t = (_fse_build_table(counts, al), al)
-        ctx.fse[kind] = t
-        return t, used
-    if ctx.fse[kind] is None:
-        raise ValueError("zstd: repeat mode with no prior table")
-    return ctx.fse[kind], 0
-
-
-def _decode_block(
-    block: bytes,
-    ctx: _FrameCtx,
-    out: bytearray,
-    frame_start: int,
-    max_out: int | None = None,
-) -> None:
-    """Decode one compressed block, APPENDING to the frame-shared
-    ``out`` buffer — matches may reach back into previous blocks of the
-    same frame (the window spans the frame), never before
-    ``frame_start``."""
-    lits, used = _decode_literals(block, ctx)
-    rest = block[used:]
-    if not rest:
-        raise ValueError("zstd: missing sequences section")
-    b0 = rest[0]
-    if b0 == 0:
-        if rest[1:]:
-            raise ValueError("zstd: trailing bytes after 0 sequences")
-        out += lits
-        return
-    if b0 < 128:
-        n_seq, pos = b0, 1
-    elif b0 < 255:
-        n_seq, pos = ((b0 - 128) << 8) + rest[1], 2
-    else:
-        n_seq, pos = rest[1] + (rest[2] << 8) + 0x7F00, 3
-    modes = rest[pos]
-    pos += 1
-    if modes & 3:
-        raise ValueError("zstd: reserved sequence mode bits set")
-    (ll_t, ll_al), used = _seq_table(
-        (modes >> 6) & 3, "ll", rest[pos:], ctx, 35
-    )
-    pos += used
-    (of_t, of_al), used = _seq_table(
-        (modes >> 4) & 3, "of", rest[pos:], ctx, 31
-    )
-    pos += used
-    (ml_t, ml_al), used = _seq_table(
-        (modes >> 2) & 3, "ml", rest[pos:], ctx, 52
-    )
-    pos += used
-    bits = _BackBits(rest[pos:])
-    ll_s = _FseState(ll_t, bits, ll_al)
-    of_s = _FseState(of_t, bits, of_al)
-    ml_s = _FseState(ml_t, bits, ml_al)
-    lit_pos = 0
-    for i in range(n_seq):
-        of_code = of_s.symbol
-        if of_code > 31:
-            raise ValueError("zstd: offset code out of range")
-        offset_val = (1 << of_code) + bits.read(of_code)
-        ml_code = ml_s.symbol
-        ml = _ML_BASE[ml_code] + bits.read(_ML_BITS[ml_code])
-        ll_code = ll_s.symbol
-        ll = _LL_BASE[ll_code] + bits.read(_LL_BITS[ll_code])
-        # repeat-offset resolution (spec: depends on literals length)
-        rep = ctx.rep
-        if offset_val > 3:
-            offset = offset_val - 3
-            ctx.rep = [offset, rep[0], rep[1]]
-        else:
-            idx = offset_val - 1 if ll != 0 else offset_val
-            if idx == 0:
-                offset = rep[0]
-            elif idx == 1:
-                offset = rep[1]
-                ctx.rep = [offset, rep[0], rep[2]]
-            elif idx == 2:
-                offset = rep[2]
-                ctx.rep = [offset, rep[0], rep[1]]
-            else:  # ll == 0 and offset_val == 3
-                offset = rep[0] - 1
-                if offset <= 0:
-                    raise ValueError("zstd: repeat offset underflow")
-                ctx.rep = [offset, rep[0], rep[1]]
-        if lit_pos + ll > len(lits):
-            raise ValueError("zstd: literals over-consumed")
-        out += lits[lit_pos : lit_pos + ll]
-        lit_pos += ll
-        if offset > len(out) - frame_start:
-            raise ValueError("zstd: match offset beyond window")
-        for _ in range(ml):  # overlapping copies are the point
-            out.append(out[-offset])
-        if max_out is not None and len(out) > max_out:
-            # incremental bomb guard: raise after ONE sequence's
-            # overshoot, never after materializing the whole output
-            raise ValueError("zstd: output exceeds size bound")
-        if i + 1 < n_seq:
-            ll_s.update(bits)
-            ml_s.update(bits)
-            of_s.update(bits)
-    if bits.bitpos != 0:
-        raise ValueError("zstd: sequence bitstream not fully consumed")
-    out += lits[lit_pos:]
-
-
-# =========================================================================
-# Frame decode
-# =========================================================================
 
 
 def zstd_dictionary_id(raw: bytes) -> int | None:
@@ -612,167 +54,3 @@ def zstd_dictionary_id(raw: bytes) -> int | None:
             return int.from_bytes(raw[pos : pos + did_size], "little") or None
     except IndexError:
         return None
-
-
-def zstd_decompress(raw: bytes, max_out: int | None = None) -> bytes:
-    """Decode one-or-more concatenated zstd frames → original bytes.
-    Raises ``ValueError`` on anything structurally invalid or outside
-    the documented subset (dictionary frames). ``max_out`` bounds the
-    TOTAL decompressed size INCREMENTALLY (checked per block and per
-    sequence, so a crafted high-ratio frame raises after at most one
-    sequence's overshoot instead of materializing the bomb first —
-    review r8b; callers with a declared size budget, like the Avro
-    block decoder, must pass it)."""
-    try:
-        return _decompress(raw, max_out)
-    except (IndexError, struct.error) as ex:  # truncated-input indexing
-        raise ValueError("zstd: truncated input") from ex
-
-
-def _decompress(raw: bytes, max_out: int | None = None) -> bytes:
-    pos = 0
-    out = bytearray()
-    if not raw:
-        raise ValueError("zstd: empty input")
-    while pos < len(raw):
-        if pos + 4 > len(raw):
-            raise ValueError("zstd: truncated magic")
-        magic = struct.unpack_from("<I", raw, pos)[0]
-        pos += 4
-        if SKIPPABLE_LO <= magic <= SKIPPABLE_HI:
-            if pos + 4 > len(raw):
-                raise ValueError("zstd: truncated skippable frame")
-            size = struct.unpack_from("<I", raw, pos)[0]
-            pos += 4 + size
-            if pos > len(raw):  # declared size runs past end-of-input
-                raise ValueError("zstd: truncated skippable frame")
-            continue
-        if magic != ZSTD_MAGIC:
-            raise ValueError("zstd: bad magic")
-        fhd = raw[pos]
-        pos += 1
-        if fhd & 0x08:
-            raise ValueError("zstd: reserved frame-header bit set")
-        single_segment = bool(fhd & 0x20)
-        checksum = bool(fhd & 0x04)
-        did_size = (0, 1, 2, 4)[fhd & 3]
-        fcs_flag = fhd >> 6
-        if not single_segment:
-            pos += 1  # Window_Descriptor (bounds irrelevant for full buf)
-        if did_size:
-            # Dictionary_ID present. ID 0 is the spec's explicit
-            # "no dictionary" encoding and decodes normally; any other
-            # ID names an EXTERNAL dictionary this decoder (and
-            # libzstd without that dictionary) cannot supply — a
-            # distinct, actionable error, not a generic decode failure
-            # (VERDICT r8 #6).
-            did = int.from_bytes(raw[pos : pos + did_size], "little")
-            pos += did_size
-            if did:
-                raise ValueError(
-                    f"zstd: dictionary frame (dictionary_id={did}) "
-                    "requires its external dictionary; external "
-                    "dictionaries are unsupported"
-                )
-        fcs_size = (
-            (1 if single_segment else 0), 2, 4, 8
-        )[fcs_flag]
-        content_size = None
-        if fcs_size:
-            content_size = int.from_bytes(
-                raw[pos : pos + fcs_size], "little"
-            )
-            if fcs_size == 2:
-                content_size += 256
-            pos += fcs_size
-        ctx = _FrameCtx()
-        frame_out_start = len(out)
-        while True:
-            if pos + 3 > len(raw):
-                raise ValueError("zstd: truncated block header")
-            bh = int.from_bytes(raw[pos : pos + 3], "little")
-            pos += 3
-            last = bh & 1
-            btype = (bh >> 1) & 3
-            bsize = bh >> 3
-            if max_out is not None and len(out) + (
-                bsize if btype in (0, 1) else 0
-            ) > max_out:
-                raise ValueError("zstd: output exceeds size bound")
-            if btype == 0:  # Raw
-                out += raw[pos : pos + bsize]
-                if pos + bsize > len(raw):
-                    raise ValueError("zstd: truncated raw block")
-                pos += bsize
-            elif btype == 1:  # RLE
-                if pos >= len(raw):
-                    raise ValueError("zstd: truncated RLE block")
-                out += bytes([raw[pos]]) * bsize
-                pos += 1
-            elif btype == 2:
-                block = raw[pos : pos + bsize]
-                if len(block) != bsize:
-                    raise ValueError("zstd: truncated compressed block")
-                pos += bsize
-                _decode_block(block, ctx, out, frame_out_start, max_out)
-            else:
-                raise ValueError("zstd: reserved block type")
-            if last:
-                break
-        if checksum:
-            if pos + 4 > len(raw):
-                raise ValueError("zstd: truncated content checksum")
-            # Content_Checksum = low 32 bits of XXH64(content, seed=0)
-            from .xxhash import xxh64
-
-            want = int.from_bytes(raw[pos : pos + 4], "little")
-            got = xxh64(bytes(out[frame_out_start:])) & 0xFFFFFFFF
-            if got != want:
-                raise ValueError("zstd: content checksum mismatch")
-            pos += 4
-        if content_size is not None and (
-            len(out) - frame_out_start != content_size
-        ):
-            raise ValueError("zstd: frame content size mismatch")
-    return bytes(out)
-
-
-def zstd_compress_stored(data: bytes, block_size: int = 1 << 17) -> bytes:
-    """Minimal VALID zstd writer: raw (stored) blocks + frame content
-    size + verified content checksum — no entropy coding, so output is
-    slightly larger than input, but any conforming decoder (libzstd,
-    this module) reads it. Gives the jar-less/pyarrow-less environment
-    a write path for .zst artifacts whose readers are standard;
-    compression worth having goes through pyarrow where present.
-    RLE runs get RLE blocks (the one free win the format offers)."""
-    out = bytearray()
-    out += struct.pack("<I", ZSTD_MAGIC)
-    n = len(data)
-    # Single_Segment + checksum; FCS field width by content size
-    if n < 256:
-        out += bytes([0x24, n])
-    elif n < 65536 + 256:
-        out += bytes([0x64])
-        out += struct.pack("<H", n - 256)
-    else:
-        out += bytes([0xA4])
-        out += struct.pack("<I", n)
-    blocks = []
-    pos = 0
-    while pos < n:
-        chunk = data[pos : pos + block_size]
-        pos += len(chunk)
-        if len(chunk) >= 4 and chunk.count(chunk[0]) == len(chunk):
-            blocks.append((1, chunk[:1], len(chunk)))  # RLE
-        else:
-            blocks.append((0, chunk, len(chunk)))  # raw
-    if not blocks:
-        blocks = [(0, b"", 0)]
-    for i, (btype, payload, size) in enumerate(blocks):
-        last = 1 if i == len(blocks) - 1 else 0
-        out += struct.pack("<I", (size << 3) | (btype << 1) | last)[:3]
-        out += payload
-    from .xxhash import xxh64
-
-    out += struct.pack("<I", xxh64(data) & 0xFFFFFFFF)
-    return bytes(out)

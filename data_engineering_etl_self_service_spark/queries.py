@@ -12574,10 +12574,8 @@ def decompress_sniff_stats(spark, sf_dir):
     Builder-exercises-parser: per doc_id the text compresses down one
     of six paths (gzip / bzip2 / xz / zstd / lz4 / passthrough); the
     chain must identify the container and reproduce the exact text.
-    The zstd rows are a genuine two-implementation interop: the builder
-    compresses with pyarrow's libzstd, the chain decodes with the pure
-    RFC 8878 decoder (operators/zstd.py — round 7; zstd used to be
-    sniffed-but-passthrough).
+    The zstd and lz4 rows are compressed and inflated with pyarrow's
+    native codecs (libzstd / liblz4).
 
     Scale: one shuffle-free Arrow-batched mapInPandas pass.
     """

@@ -19,12 +19,9 @@ records. This module implements that spec directly:
 - **Named-type references**: record/enum/fixed definitions register
   under both short name and namespace-qualified fullname; later
   references by either resolve.
-- **Codecs**: every spec codec with NO optional dependency (round 8):
-  ``null`` and ``deflate`` (raw zlib, wbits=-15) via stdlib;
-  ``snappy`` (raw snappy + 4-byte big-endian CRC32 suffix per spec)
-  and ``zstd`` via pyarrow when importable, otherwise through the
-  in-repo pure codecs (operators/snappy.py, zstd.py, zstd_enc.py) —
-  both read and write.
+- **Codecs**: every spec codec, read and write: ``null`` and
+  ``deflate`` (raw zlib, wbits=-15) via stdlib; ``snappy`` (raw snappy
+  + 4-byte big-endian CRC32 suffix per spec) and ``zstd`` via pyarrow.
 - **Unions**: ``[null, X]`` → nullable X; ``[int, long]`` → long and
   ``[float, double]`` → double (spark-avro's promotions); any other
   multi-branch union → a struct of nullable ``member0..memberN``
@@ -61,18 +58,6 @@ import struct
 import zlib
 
 MAGIC = b"Obj\x01"
-
-
-def _pa_codec(name: str):
-    """pyarrow codec by name, or None when unavailable (import-try)."""
-    try:
-        import pyarrow as pa
-
-        if pa.Codec.is_available(name):
-            return pa.Codec(name)
-    except Exception:
-        return None
-    return None
 
 
 # =========================================================================
@@ -528,21 +513,18 @@ def _decompress_block(data: bytes, codec: str) -> bytes:
             raise ValueError(
                 "avro: snappy block exceeds decompressed-size bound"
             )
-        pa = _pa_codec("snappy")
-        if pa is None:
-            # pyarrow-less fallback: pure raw-snappy decoder (round 8)
-            from ..operators.snappy import snappy_decompress
+        import pyarrow as pa
 
-            raw = snappy_decompress(body)
-        else:
-            raw = pa.decompress(body, decompressed_size=n, asbytes=True)
+        raw = pa.decompress(
+            body, decompressed_size=n, codec="snappy", asbytes=True
+        )
         if struct.pack(">I", zlib.crc32(raw) & 0xFFFFFFFF) != crc:
             raise ValueError("avro: snappy block CRC mismatch")
         return raw
     if codec == "zstd":
-        # a dictionary frame fails both libzstd and the pure decoder
-        # with an opaque "corrupt" — probe the header first and raise
-        # the actionable error through the OCF path (VERDICT r8 #6)
+        # a dictionary frame fails libzstd with an opaque "corrupt" —
+        # probe the header first and raise the actionable error
+        # through the OCF path (VERDICT r8 #6)
         from ..operators.zstd import zstd_dictionary_id
 
         _did = zstd_dictionary_id(data)
@@ -552,19 +534,11 @@ def _decompress_block(data: bytes, codec: str) -> bytes:
                 "requires its external dictionary; external "
                 "dictionaries are unsupported"
             )
-        pa = _pa_codec("zstd")
-        if pa is None:
-            # pyarrow-less fallback: the pure RFC 8878 decoder (round 8
-            # — zstd-coded OCFs now read with NO optional dependency);
-            # the bound is enforced INSIDE the decode loop, so a
-            # crafted high-ratio frame raises instead of materializing
-            # the bomb first (review r8b)
-            from ..operators.zstd import zstd_decompress
+        import pyarrow as pa
 
-            return zstd_decompress(data, max_out=_MAX_BLOCK_BYTES)
-        stream = __import__("pyarrow").input_stream(
-            io.BytesIO(data), compression="zstd"
-        )
+        # a bounded streaming read: a crafted high-ratio frame raises
+        # instead of materializing the bomb first (review r8b)
+        stream = pa.input_stream(io.BytesIO(data), compression="zstd")
         out = stream.read(_MAX_BLOCK_BYTES + 1)
         if len(out) > _MAX_BLOCK_BYTES:
             raise ValueError(
@@ -581,23 +555,14 @@ def _compress_block(data: bytes, codec: str) -> bytes:
         c = zlib.compressobj(wbits=-15)
         return c.compress(data) + c.flush()
     if codec == "snappy":
-        pa = _pa_codec("snappy")
-        if pa is None:
-            from ..operators.snappy import snappy_compress
+        import pyarrow as pa
 
-            body = snappy_compress(data)
-        else:
-            body = pa.compress(data, asbytes=True)
+        body = pa.compress(data, codec="snappy", asbytes=True)
         return body + struct.pack(">I", zlib.crc32(data) & 0xFFFFFFFF)
     if codec == "zstd":
-        pa = _pa_codec("zstd")
-        if pa is None:
-            # pure zstd writer (raw literals + predefined-FSE
-            # sequences) — real compression with NO optional dependency
-            from ..operators.zstd_enc import zstd_compress
+        import pyarrow as pa
 
-            return zstd_compress(data)
-        return pa.compress(data, asbytes=True)
+        return pa.compress(data, codec="zstd", asbytes=True)
     raise ValueError(f"avro: unsupported codec {codec!r}")
 
 

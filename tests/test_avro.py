@@ -1316,30 +1316,6 @@ def test_multi_branch_union_with_logical_members():
     ) == rec2
 
 
-def test_ocf_compressed_codecs_work_without_pyarrow(monkeypatch):
-    """zstd- AND snappy-coded OCFs read and write through the pure
-    in-repo codecs when pyarrow is unavailable (round 8), and the two
-    tiers interoperate: pure-written frames read back through the
-    native path and vice versa."""
-    from data_engineering_etl_self_service_spark.sources import avro_ocf
-
-    recs = _full_records(30)
-    for codec in ("zstd", "snappy"):
-        native = write_ocf(recs, FULL_SCHEMA, codec=codec)
-        monkeypatch.setattr(avro_ocf, "_pa_codec", lambda name: None)
-        # pure read of a native-written container
-        out = read_ocf(native)[2]
-        assert [r["idx"] for r in out] == [r["idx"] for r in recs]
-        # pure write -> pure read round trip
-        pure = write_ocf(recs, FULL_SCHEMA, codec=codec)
-        out2 = read_ocf(pure)[2]
-        assert [r["word"] for r in out2] == [r["word"] for r in recs]
-        monkeypatch.undo()
-        # native read of the pure-written container
-        out3 = read_ocf(pure)[2]
-        assert [r["word"] for r in out3] == [r["word"] for r in recs]
-
-
 def test_promotion_union_encodes_on_wider_branch():
     """[int,long] / [float,double] unions encode on the WIDER branch
     (review r8, repro'd): the float branch silently destroyed double

@@ -99,52 +99,57 @@ def test_sniff_decompress_all_containers_and_degrade():
     assert lz4["compression"] == "lz4" and not lz4["ok"]
 
 
-def test_sniff_decompress_native_first_pure_fallback(monkeypatch):
-    """Codec ordering contract (VERDICT r7 #1): the arrival front door
-    uses the native libzstd/liblz4 codec when pyarrow is importable and
-    falls back to the pure-Python decoders only when it isn't (or the
-    native decode fails)."""
+def test_dictionary_frame_specific_error_all_paths():
+    """VERDICT r8 #6: a zstd frame naming an external dictionary must
+    fail with a DISTINCT actionable error — naming the dictionary id
+    and the missing piece — through the sniffing front door (ok=False
+    passthrough + error message) and the Avro OCF block path (loud).
+    The spec's explicit Dictionary_ID=0 form ('no dictionary') must
+    still decode."""
     import pyarrow as pa
+    import pytest
 
-    from data_engineering_etl_self_service_spark.operators import (
-        encoding,
-        lz4,
-        zstd,
+    from data_engineering_etl_self_service_spark.operators.encoding import (
+        sniff_decompress,
+    )
+    from data_engineering_etl_self_service_spark.operators.zstd import (
+        zstd_dictionary_id,
+    )
+    from data_engineering_etl_self_service_spark.sources.avro_ocf import (
+        _decompress_block,
     )
 
-    text = b"ordering contract payload " * 8
-    frames = {
-        "zstd": pa.Codec("zstd").compress(text, asbytes=True),
-        "lz4": pa.Codec("lz4").compress(text, asbytes=True),
-    }
-
-    # 1) native path is the default: poison the pure decoders — the
-    #    decode must still succeed without ever touching them
-    monkeypatch.setattr(
-        zstd, "zstd_decompress", lambda raw: (_ for _ in ()).throw(
-            AssertionError("pure zstd decoder reached on native path")
-        ),
+    payload = b"hello dictionary world " * 40
+    frame = pa.compress(payload, codec="zstd", asbytes=True)
+    assert zstd_dictionary_id(frame) is None
+    # graft a 1-byte Dictionary_ID=7 into the real frame header
+    fhd = frame[4]
+    assert fhd & 3 == 0
+    ins = 5 if fhd & 0x20 else 6  # after Window_Descriptor if present
+    crafted = (
+        frame[:4] + bytes([fhd | 0x01]) + frame[5:ins] + b"\x07"
+        + frame[ins:]
     )
-    monkeypatch.setattr(
-        lz4, "lz4_decompress", lambda raw: (_ for _ in ()).throw(
-            AssertionError("pure lz4 decoder reached on native path")
-        ),
+    assert zstd_dictionary_id(crafted) == 7
+    # sniffing front door: bytes pass through with the specific reason
+    r = sniff_decompress(crafted)
+    assert r["compression"] == "zstd" and r["ok"] is False
+    assert r["data"] == crafted
+    assert "requires its external dictionary" in r["error"]
+    assert "dictionary_id=7" in r["error"]
+    # OCF block path: loud, specific
+    with pytest.raises(
+        ValueError, match=r"avro: zstd dictionary frame \(dictionary_id=7\)"
+    ):
+        _decompress_block(crafted, "zstd")
+    # Dictionary_ID=0 is the spec's 'no dictionary' encoding: decodes
+    crafted0 = (
+        frame[:4] + bytes([fhd | 0x01]) + frame[5:ins] + b"\x00"
+        + frame[ins:]
     )
-    for codec, raw in frames.items():
-        r = encoding.sniff_decompress(raw)
-        assert (r["compression"], r["ok"], r["data"]) == (codec, True, text)
-
-    # 2) no-pyarrow fallback: kill the native path — the pure decoders
-    #    (restored) must inflate the same frames bit-identically
-    monkeypatch.undo()
-    monkeypatch.setattr(
-        encoding,
-        "_native_decompress",
-        lambda raw, codec: (_ for _ in ()).throw(ImportError("no pyarrow")),
-    )
-    for codec, raw in frames.items():
-        r = encoding.sniff_decompress(raw)
-        assert (r["compression"], r["ok"], r["data"]) == (codec, True, text)
+    assert zstd_dictionary_id(crafted0) is None
+    r0 = sniff_decompress(crafted0)
+    assert (r0["compression"], r0["ok"], r0["data"]) == ("zstd", True, payload)
 
 
 @settings(max_examples=60, deadline=None)

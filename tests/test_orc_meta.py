@@ -560,23 +560,47 @@ def test_strip_helper_roundtrip_and_statted_merge_unchanged(tmp_path):
     assert (xcol["min"], xcol["max"]) == (1, 6)
 
 
-def test_zstd_chunk_bomb_is_bounded(tmp_path):
-    """A hostile zstd chunk declaring a huge expansion must fail the
-    output ceiling BEFORE materializing (review r9: the native path
-    had no bound)."""
+def _compressed_chunks(data: bytes) -> dict:
+    """``data`` as one raw ORC chunk per compressed codec."""
+    import zlib
+
+    deflate = zlib.compressobj(wbits=-15)
+    return {
+        "zlib": deflate.compress(data) + deflate.flush(),
+        "snappy": pa.compress(data, codec="snappy", asbytes=True),
+        "zstd": pa.compress(data, codec="zstd", asbytes=True),
+        "lz4": pa.compress(data, codec="lz4_raw", asbytes=True),
+    }
+
+
+def test_orc_chunk_bomb_is_bounded():
+    """Every compressed ORC codec inflates a chunk under its output
+    bound and fails that bound with ValueError instead of
+    materializing a hostile chunk's declared expansion (review r9)."""
     from data_engineering_etl_self_service_spark.operators.orc_meta import (
-        _MAX_STREAM,
         _inflate_chunk,
     )
-    from data_engineering_etl_self_service_spark.operators.zstd_enc import (
-        zstd_compress,
+
+    data = b"\x00" * (300 << 10)
+    for codec, chunk in _compressed_chunks(data).items():
+        assert len(chunk) < 16 << 10, codec  # tiny wire, big output
+        assert _inflate_chunk(chunk, codec, 1 << 20) == data, codec
+        with pytest.raises(ValueError, match="bound"):
+            _inflate_chunk(chunk, codec, 1 << 10)
+
+
+def test_orc_truncated_chunk_raises_valueerror():
+    """A truncated compressed chunk fails as ValueError for every codec
+    — the error the ORC compaction loop records per file."""
+    from data_engineering_etl_self_service_spark.operators.orc_meta import (
+        _inflate_chunk,
     )
 
-    # RLE-style frame: tiny wire bytes, enormous declared output
-    big = zstd_compress(b"\x00" * (300 << 10))
-    out = _inflate_chunk(big, "zstd")
-    assert len(out) == 300 << 10  # sane frames inflate fine
-    assert _MAX_STREAM > 0  # and the ceiling wires through max_out
+    data = bytes(range(256)) * 400
+    for codec, chunk in _compressed_chunks(data).items():
+        assert _inflate_chunk(chunk, codec, 1 << 20) == data, codec
+        with pytest.raises(ValueError, match=codec):
+            _inflate_chunk(chunk[: len(chunk) // 2], codec, 1 << 20)
 
 
 # -------------------------------------------------------------- compaction

@@ -32,6 +32,22 @@ from data_engineering_etl_self_service_spark.operators.parquet_meta import (
 )
 
 
+def test_xxhash_reference_vectors():
+    """operators/xxhash.py against the published XXH64 sanity vectors —
+    the hash every bloom probe and insert goes through."""
+    from data_engineering_etl_self_service_spark.operators.xxhash import (
+        xxh64,
+    )
+
+    msg80 = b"1234567890" * 8
+    assert xxh64(b"") == 0xEF46DB3751D8E999
+    assert xxh64(b"a") == 0xD24EC4F1A98C6E5B
+    assert xxh64(b"abc") == 0x44BC2CF5AD770999
+    assert xxh64(b"message digest") == 0x066ED728FCEEB3BE
+    assert xxh64(b"abcdefghijklmnopqrstuvwxyz") == 0xCFE1F278FA89835C
+    assert xxh64(msg80) == 0xE04A477F19EE145D
+
+
 def test_bloom_header_thrift_round_trip():
     for n in (32, 320, 65536, (1 << 20) + 32):
         d = thrift_compact_decode(encode_bloom_header(n), 0)
